@@ -1,10 +1,7 @@
 package graft.alco
 
-import graft.functions.KeyedRollup
 import org.apache.spark.sql.{Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-
-import scala.util.Try
 
 /** Small-file compaction for the routed table — the maintenance op every
   * streaming ingest needs: the foreachBatch path commits a few files per
@@ -66,8 +63,6 @@ object Compact {
     val fs = tmpPath.getFileSystem(hconf)
     fs.delete(tmpPath, true) // stale staging from a crashed compaction
 
-    val partKey = format_string("tool_key=%s/role=%s/day=%s",
-      col("tool_key"), col("role"), col("day").cast("string"))
     val targetFiles = parts.flatMap(targets).map(f => s"$routedPath/$f")
     def readTargets = spark.read.option("basePath", routedPath)
       .parquet(targetFiles: _*)
@@ -79,25 +74,15 @@ object Compact {
     }.toMap
 
     val obs = new Observation(s"compact_${snap.snapshotId}")
-    readTargets
-      .observe(obs, KeyedRollup.keyed_rollup(partKey,
-        array().cast("array<string>")).as("counts"))
-      // co-locate each partition dir's rows in one task (bin-packing needs
-      // it — otherwise every input split re-emits its own small file); the
-      // within-task sort restores the (conv_id, turn_idx) clustering
-      .repartition(col("tool_key"), col("role"), col("day"))
-      .sortWithinPartitions("tool_key", "role", "day", "conv_id", "turn_idx")
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-      .option("compression", cfg.parquetCodec)
-      .option("parquet.bloom.filter.enabled#conv_id", "true")
-      .option("parquet.bloom.filter.expected.ndv#conv_id", cfg.bloomNdv.toString)
-      .partitionBy("tool_key", "role", "day")
-      .parquet(tmp)
-    val written = Try(obs.get).toOption.flatMap(_.get("counts"))
-      .map(j => KeyedRollup.parse(j.asInstanceOf[String])
-        .map(e => e.key -> e.n).toMap)
-      .getOrElse(Map.empty[String, Long])
+    // co-locate each partition dir's rows in one task (bin-packing needs
+    // it — otherwise every input split re-emits its own small file); the
+    // routed layout's within-task sort restores the (conv_id, turn_idx)
+    // clustering
+    TableWrite(readTargets
+      .observe(obs, TableWrite.partitionCountMetric)
+      .repartition(TableWrite.partitionColumns.map(col): _*),
+      tmp, SaveMode.Overwrite, Some(cfg))
+    val written = TableWrite.partitionCounts(obs)
     if (written != before) {
       fs.delete(tmpPath, true)
       throw new IllegalStateException(

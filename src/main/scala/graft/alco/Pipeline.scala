@@ -115,7 +115,7 @@ object Pipeline {
     def day: String = Instant.ofEpochSecond(windowStartSec)
       .atZone(ZoneOffset.UTC).toLocalDate.toString
     def partition: String =
-      s"tool_key=${SinkKey.sanitize(tool)}/role=$role/day=$day"
+      TableWrite.partitionDir(SinkKey.sanitize(tool), role, day)
   }
 
   /** @param writerId scopes batch-level idempotency (manifest batch keys are
@@ -207,28 +207,15 @@ object Pipeline {
       unix_timestamp(date_trunc("DAY", col("ts"))).cast("string"))
     val distinctArr = array(distinctCols.map(c => col(c).cast("string")): _*)
 
-    // Fan-out write straight off the dedup shuffle. sortWithinPartitions by
-    // the sink key keeps the dynamic-partition writer on one open file at a
-    // time; (conv_id, turn_idx) as the sort tail preserves the stable order
-    // inside each file.
+    // Fan-out write straight off the dedup shuffle, in the routed layout.
     val tWrite = System.nanoTime()
-    keyed
+    TableWrite(keyed
       .select(cfg.writeColumns.map(col) ++ Seq(col("tool_key"),
         statsKey.as("__stats_key"), distinctArr.as("__distinct_vals")): _*)
       .observe(rollObs, KeyedRollup.keyed_rollup(
         col("__stats_key"), col("__distinct_vals")).as("rollup"))
-      .drop("__stats_key", "__distinct_vals")
-      .sortWithinPartitions("tool_key", "role", "day", "conv_id", "turn_idx")
-      .write
-      .mode(SaveMode.Append)
-      .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-      .option("compression", cfg.parquetCodec)
-      // point lookups (grep context view) seek by conv_id — bloom filters
-      // skip row groups without touching dictionary pages.
-      .option("parquet.bloom.filter.enabled#conv_id", "true")
-      .option("parquet.bloom.filter.expected.ndv#conv_id", cfg.bloomNdv.toString)
-      .partitionBy("tool_key", "role", "day")
-      .parquet(routedPath)
+      .drop("__stats_key", "__distinct_vals"),
+      routedPath, SaveMode.Append, Some(cfg))
     val writeMs = ms(tWrite)
 
     val tAgg = System.nanoTime()
@@ -317,7 +304,7 @@ object Pipeline {
     val audit = contribs.map(c =>
       (snap.snapshotId, batchId, c.partition, c.n, ms(t0)))
       .toDF("snapshot_id", "batch_id", "partition", "row_count", "wall_ms")
-    audit.write.mode(SaveMode.Append).parquet(s"$outRoot/audit")
+    TableWrite(audit, s"$outRoot/audit", SaveMode.Append)
     val outputsMs = ms(tOutputs)
 
     Result(batchId, snap.snapshotId, inputRows, routedRows, quarantined,
@@ -340,13 +327,12 @@ object Pipeline {
   private def writeBatchOutputs(spark: SparkSession, outRoot: String,
       batchId: Long, contribs: Seq[Contrib], distinctCols: Seq[String]): Unit = {
     import spark.implicits._
-    contribs.map { c =>
+    TableWrite(contribs.map { c =>
       val start = java.sql.Timestamp.from(Instant.ofEpochSecond(c.windowStartSec))
       val end = java.sql.Timestamp.from(Instant.ofEpochSecond(c.windowStartSec + 86400L))
       (c.tool, c.role, start, end, c.n)
-    }.toDF("tool", "role", "window_start", "window_end", "n")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$outRoot/rollup_counts_batch_$batchId")
+    }.toDF("tool", "role", "window_start", "window_end", "n").coalesce(1),
+      s"$outRoot/rollup_counts_batch_$batchId", SaveMode.Overwrite)
 
     val distinctRows = contribs.flatMap { c =>
       val sink = s"${c.tool}/${c.role}"
@@ -355,9 +341,8 @@ object Pipeline {
       }
     }.groupMapReduce(_._1)(_._2)(_ ++ _)
       .toSeq.collect { case ((sink, c), vs) if vs.nonEmpty => (sink, c, vs.toSeq.sorted) }
-    distinctRows.toDF("sink_key", "column", "values")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$outRoot/distinct_sets_batch_$batchId")
+    TableWrite(distinctRows.toDF("sink_key", "column", "values").coalesce(1),
+      s"$outRoot/distinct_sets_batch_$batchId", SaveMode.Overwrite)
   }
 
   /** Copy-on-write rewrite of partitions receiving rows on top of committed
@@ -379,24 +364,10 @@ object Pipeline {
     val df = spark.read.option("basePath", routedPath)
       .parquet(parts.map(p => s"$routedPath/$p"): _*)
     val mObs = new Observation(s"merge_batch_$batchId")
-    val partKey = format_string("tool_key=%s/role=%s/day=%s",
-      col("tool_key"), col("role"), col("day").cast("string"))
-    Route.replaceSemantics(df)
-      .observe(mObs, KeyedRollup.keyed_rollup(partKey,
-        array().cast("array<string>")).as("counts"))
-      .sortWithinPartitions("tool_key", "role", "day", "conv_id", "turn_idx")
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-      .option("compression", cfg.parquetCodec)
-      .option("parquet.bloom.filter.enabled#conv_id", "true")
-      .option("parquet.bloom.filter.expected.ndv#conv_id", cfg.bloomNdv.toString)
-      .partitionBy("tool_key", "role", "day")
-      .parquet(mergeTmp)
-
-    val counts = Try(mObs.get).toOption.flatMap(_.get("counts"))
-      .map(j => KeyedRollup.parse(j.asInstanceOf[String])
-        .map(e => e.key -> e.n).toMap)
-      .getOrElse(Map.empty)
+    TableWrite(Route.replaceSemantics(df)
+      .observe(mObs, TableWrite.partitionCountMetric),
+      mergeTmp, SaveMode.Overwrite, Some(cfg))
+    val counts = TableWrite.partitionCounts(mObs)
 
     // Move merge outputs into the live partition dirs (driver-side,
     // O(#files in overlapping partitions)).

@@ -154,7 +154,7 @@ object TermIndex {
     // O(#files) rows — a handful of output files is plenty at any scale
     val written = index.coalesce(8).cache()
     try {
-      written.write.mode(SaveMode.Overwrite).parquet(tmp)
+      TableWrite(written, tmp, SaveMode.Overwrite)
       // every committed file must have exactly one bloom row — a dropped
       // mapping join row or a reuse-join miss fails LOUDLY before publish
       val n = written.count()

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.alco.{Model, Parse}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.alco.{Model, Parse, TableWrite}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -119,8 +119,7 @@ object StreamPipeline {
           .unionByName(updates)
       case None => updates
     }
-    merged.coalesce(1).write.mode("overwrite")
-      .parquet(s"$outDir/v-$batchId")
+    TableWrite(merged.coalesce(1), s"$outDir/v-$batchId", SaveMode.Overwrite)
     vacuumRollupVersions(outDir, batchId)
   }
 

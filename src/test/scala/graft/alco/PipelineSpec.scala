@@ -266,6 +266,56 @@ class PipelineSpec extends SparkSpec {
       == oracleRouted.size.toLong)
   }
 
+  test("tool values Spark escapes in partition paths survive fresh, merge and compaction") {
+    // Spark writes tool_key=mcp%3Asearch for mcp:search; the manifest, the
+    // merge counts and the compaction census must all name that directory,
+    // or the committed set silently drops the partition's files.
+    val outE = tmpDir("pipe_escaped")
+    val routed = s"$outE/routed"
+    val renames = Seq("bash" -> "mcp:search", "search" -> "fs/read",
+      "edit" -> "a=b", "read" -> "50%")
+    val escaped = turns.toDF().withColumn("tool",
+      renames.foldLeft(col("tool")) { case (c, (from, to)) =>
+        when(col("tool") === from, lit(to)).otherwise(c)
+      }).as[Turn].cache()
+    val cut = lit("2025-01-03 00:00:00").cast("timestamp")
+    val first = escaped.filter($"ts" < cut)
+    def distinctKeys(ds: org.apache.spark.sql.Dataset[Turn]): Long =
+      NaiveOracle.route(ds.collect().toSeq)._1.size.toLong
+    def check(step: String, want: Long): Unit = {
+      val snap = Manifest.latest(routed).get
+      val committed = Manifest.readCommitted(spark, routed).get
+      assert(committed.count() == want, s"$step: committed rows")
+      assert(snap.files.toSet == listDataFiles(routed),
+        s"$step: manifest names exactly the files on disk")
+      assert(renames.map(_._2).toSet.subsetOf(
+        committed.select($"tool").distinct().as[String].collect().toSet), step)
+      snap.stats.foreach { st =>
+        val files = snap.files.filter(_.startsWith(st.partition + "/"))
+        assert(files.nonEmpty, s"$step: ${st.partition} names no files")
+        assert(spark.read.option("basePath", routed)
+          .parquet(files.map(f => s"$routed/$f"): _*).count() == st.rowCount,
+          s"$step: ${st.partition} row count")
+      }
+    }
+    val cfgSmall = Pipeline.Config(maxRecordsPerFile = 100L)
+
+    val r0 = Pipeline.run(spark, first.toDF(), outE, cfgSmall, batchId = 0L)
+    check("fresh", distinctKeys(first))
+    assert(r0.routedRows == distinctKeys(first))
+    assert(Manifest.latest(routed).get.files
+      .exists(_.startsWith("tool_key=mcp%3Asearch/")))
+
+    val r1 = Pipeline.run(spark, escaped.toDF(), outE, cfgSmall, batchId = 1L)
+    assert(r1.mergedPartitions > 0, "the second batch overlaps the first")
+    check("merge", distinctKeys(escaped))
+
+    val c = Compact.compact(spark, outE, minFiles = 2)
+    assert(c.compactedPartitions.exists(_.startsWith("tool_key=50%25/")), s"$c")
+    check("compact", distinctKeys(escaped))
+    escaped.unpersist()
+  }
+
   test("manifest optimistic concurrency: expected-parent and CAS publish conflicts abort") {
     val root = tmpDir("manifest_cas")
     Manifest.commit(root, 0L, Nil, Nil, 0L) // snapshot 0

@@ -1,7 +1,6 @@
 package graft.alco
 
 import graft.SparkSpec
-import graft.functions.BoundedCollectSet
 import org.apache.spark.sql.functions._
 
 class SinkSpec extends SparkSpec {
@@ -39,19 +38,5 @@ class SinkSpec extends SparkSpec {
     val p1 = Sink.ensureTable(root, Sink.registry.head)
     val p2 = Sink.ensureTable(root, Sink.registry.head)
     assert(p1 == p2 && new java.io.File(s"$p1/_manifest").isDirectory)
-  }
-
-  test("bounded_collect_set caps state deterministically") {
-    val df = (1 to 1000).map(i => ("k", s"v${1000 - i}")).toDF("k", "v")
-    val got = df.groupBy($"k")
-      .agg(BoundedCollectSet.bounded_collect_set($"v", 5).as("vals"))
-      .select($"vals").as[Seq[String]].head()
-    // smallest 5 values lexicographically, independent of input order
-    assert(got == (0 until 1000).map(i => s"v$i").sorted.take(5))
-    // rerun equality (determinism under different partitioning)
-    val got2 = df.repartition(7).groupBy($"k")
-      .agg(BoundedCollectSet.bounded_collect_set($"v", 5).as("vals"))
-      .select($"vals").as[Seq[String]].head()
-    assert(got2 == got)
   }
 }
