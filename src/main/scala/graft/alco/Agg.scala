@@ -39,13 +39,6 @@ object Agg {
       .agg(sort_array(collect_set(col("value"))).as("values"))
   }
 
-  /** Unbounded-cardinality companion: HLL++ distinct conv_ids per sink
-    * (exact collect_set of conv_id would not hold at 10^12 rows).
-    */
-  def approxConvCardinality(routed: DataFrame): DataFrame =
-    routed.groupBy(col("tool"), col("role"))
-      .agg(approx_count_distinct(col("conv_id")).as("approx_convs"))
-
   /** Pagination total (alco: Sphinx `total_found` bounded by max_matches). */
   def matchCount(filtered: DataFrame, maxMatches: Option[Int] = None): Long =
     maxMatches.map(m => filtered.limit(m).count()).getOrElse(filtered.count())

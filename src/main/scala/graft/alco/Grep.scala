@@ -1,6 +1,7 @@
 package graft.alco
 
 import java.sql.Timestamp
+import java.util.Locale
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -54,7 +55,7 @@ object Grep {
     */
   def matchPredicate(terms: Seq[String], mode: MatchMode): Column = {
     if (terms.isEmpty) return lit(true)
-    val lowered = terms.map(_.toLowerCase)
+    val lowered = terms.map(_.toLowerCase(Locale.ROOT))
     mode match {
       case MatchAny =>
         graft.functions.GraftFunctions.terms_match(col("text"), lowered, 1)
@@ -71,13 +72,16 @@ object Grep {
         // sequence as consecutive tokens — proven equivalent in ExprSpec
         // (fuzzed vs rlike) and oracle-pinned by q43. Terms carrying
         // non-word chars (or empty) keep the regex engine: there \W+ can
-        // overlap term content and the token argument breaks down.
+        // overlap term content and the token argument breaks down. `(?i)`
+        // without `(?u)` folds ASCII only, as the byte scans and the
+        // term-index blooms do; `lower(text)` would also turn U+212A into
+        // `k` and match a token no bloom holds, so pruning would drop the row.
         if (lowered.forall(pureToken))
           graft.functions.GraftFunctions.phrase_match(col("text"), lowered)
         else {
           val pat = lowered.map(java.util.regex.Pattern.quote)
-            .mkString("\\b", "\\W+", "\\b")
-          lower(col("text")).rlike(pat)
+            .mkString("(?i)\\b", "\\W+", "\\b")
+          col("text").rlike(pat)
         }
       case MatchQuorum(k) =>
         // k <= 0 degenerates to match-everything (the replaced sum >= k
@@ -136,7 +140,9 @@ object Grep {
     * full scan. Soundness per mode (tokens(text) never contains non-word
     * chars, so a term that is not a pure token can never equal a token):
     *  - ANY: a row matches only via a pure-token term, so a candidate file
-    *    must contain >= 1 of the pure subset;
+    *    must contain >= 1 of the pure subset — unless a term is empty: it
+    *    hits any text with a leading or trailing separator (TermsMatch),
+    *    which no bloom records, so the query is not prunable;
     *  - ALL / PROXIMITY: every term must occur as a whole token — only
     *    prunable when all terms are pure (a non-pure term makes the
     *    predicate constant-false; full scan of that is still correct);
@@ -147,12 +153,12 @@ object Grep {
     * notTerms never prune (negation has no bloom form).
     */
   private[alco] def probePlan(q: Query): Option[(Seq[String], Int)] = {
-    val lowered = q.terms.map(_.toLowerCase)
+    val lowered = q.terms.map(_.toLowerCase(Locale.ROOT))
     if (lowered.isEmpty) return None
     q.mode match {
       case MatchAny =>
         val pure = lowered.filter(pureToken).distinct
-        if (pure.isEmpty) None else Some((pure, 1))
+        if (pure.isEmpty || lowered.contains("")) None else Some((pure, 1))
       case MatchAll | MatchProximity(_) =>
         if (!lowered.forall(pureToken)) None
         else { val d = lowered.distinct; Some((d, d.size)) }
@@ -278,7 +284,7 @@ object Grep {
     * conv_id by default).
     */
   def withNeighbors(routed: DataFrame, n: Int = 1,
-                    roles: Seq[ColumnRole] = Model.columnRoles): DataFrame = {
+                    roles: Seq[ColumnRole] = Pipeline.defaultRoles): DataFrame = {
     val ctx = roles.filter(_.context).map(_.name)
     require(ctx.nonEmpty, "at least one context column role required")
     val w = Window.partitionBy(ctx.map(col): _*).orderBy(col("turn_idx"))

@@ -49,21 +49,4 @@ object Model {
     StructField("text", StringType, nullable = false),
     StructField("tool", StringType, nullable = false),
     StructField("ts", TimestampType, nullable = false)))
-
-  /** Column roles for the transcripts domain: `tool`/`role`/`status`/
-    * `called_tool` are "filtered" (alco: Sphinx attributes + Redis distinct
-    * sets); `conv_id` is the context-grouping column (alco: `host`).
-    */
-  val columnRoles: Seq[ColumnRole] = Seq(
-    ColumnRole("conv_id", context = true),
-    ColumnRole("turn_idx"),
-    ColumnRole("role", filtered = true),
-    ColumnRole("tool", filtered = true),
-    ColumnRole("called_tool", filtered = true),
-    ColumnRole("status", filtered = true),
-    ColumnRole("text"),
-    ColumnRole("ts"))
-
-  def filteredColumns: Seq[String] = columnRoles.filter(_.filtered).map(_.name)
-  def contextColumns: Seq[String] = columnRoles.filter(_.context).map(_.name)
 }

@@ -50,17 +50,6 @@ object Pipeline {
 
   final case class Config(
       maxRecordsPerFile: Long = 2L * 1000 * 1000,
-      // zstd: encode speed ≈ lz4_raw on this profile (warmed A/B, Profile
-      // EXPERIMENTS, BASELINE.md round-4 table) with ~30% smaller files than
-      // snappy/lz4 (75.6 vs 105.8 MB per 4M rows) — at the 100 TB design
-      // point the storage + downstream-scan savings dominate everything.
-      parquetCodec: String = "zstd",
-      // Right-size the conv_id bloom filter: without an NDV hint parquet's
-      // AdaptiveBlockSplitBloomFilter keeps several candidate bitsets alive
-      // per open row group until it learns the cardinality — expensive with
-      // 32 concurrent dynamic-partition writers. ~50 turns/conv ⇒ ~100k
-      // distinct conv_ids per 2M-row file is the right order.
-      bloomNdv: Long = 100000,
       columnRoles: Seq[ColumnRole] = defaultRoles) {
     /** alco LoggerColumn.filtered analog → distinct-value rollup columns. */
     def distinctColumns: Seq[String] =
@@ -172,7 +161,7 @@ object Pipeline {
     // enrich output (role_group/tool_family/is_*/enrich_missing) is in it —
     // Catalyst cannot eliminate a left outer join it can't prove unique, so
     // the two broadcast probes ran per row for columns provably dropped.
-    // Measured (PROFILE_MODE=enrichab, 2M rows, 4 interleaved pairs): the
+    // Measured (round-6 A/B, 2M rows, 4 interleaved pairs): the
     // enrich-free chain is stable at 4.5-4.6 s while the enriched one
     // swings 4.7-9.9 s in the same windows. The enrich operator itself
     // (O16) stays on the query surface (q07/q31/q33/q34, entry()), where

@@ -33,6 +33,19 @@ object TableWrite {
     "fs.file.impl" -> classOf[LocalFs].getName,
     "fs.file.impl.disable.cache" -> "true")
 
+  // zstd: encode speed ≈ lz4_raw on this profile (warmed A/B, BASELINE.md
+  // round-4 table) with ~30% smaller files than snappy/lz4 (75.6 vs
+  // 105.8 MB per 4M rows) — at the 100 TB design point the storage +
+  // downstream-scan savings dominate everything.
+  private val ParquetCodec = "zstd"
+
+  // Right-size the conv_id bloom filter: without an NDV hint parquet's
+  // AdaptiveBlockSplitBloomFilter keeps several candidate bitsets alive
+  // per open row group until it learns the cardinality — expensive with
+  // 32 concurrent dynamic-partition writers. ~50 turns/conv ⇒ ~100k
+  // distinct conv_ids per 2M-row file is the right order.
+  private val BloomNdv = 100000L
+
   /** Write `df` as parquet at `path`.
     *
     * @param routed the routed-table layout: rows sorted by sink key then
@@ -40,7 +53,7 @@ object TableWrite {
     *               writer keeps one open file at a time, the grep context view
     *               relies on the clustering), partitioned by
     *               `partitionColumns`, at most `maxRecordsPerFile` rows per
-    *               file, the configured codec and a conv_id bloom filter
+    *               file, zstd and a conv_id bloom filter
     *               (point lookups skip row groups without dictionary pages).
     *               None writes `df` as it is, with the session's defaults.
     */
@@ -53,9 +66,9 @@ object TableWrite {
             .map(col): _*)
           .write
           .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
-          .option("compression", cfg.parquetCodec)
+          .option("compression", ParquetCodec)
           .option("parquet.bloom.filter.enabled#conv_id", "true")
-          .option("parquet.bloom.filter.expected.ndv#conv_id", cfg.bloomNdv.toString)
+          .option("parquet.bloom.filter.expected.ndv#conv_id", BloomNdv.toString)
           .partitionBy(partitionColumns: _*)
     }
     writer.mode(mode).options(fsOptions).parquet(path)

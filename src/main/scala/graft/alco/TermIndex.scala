@@ -1,7 +1,7 @@
 package graft.alco
 
 import graft.functions.{BloomTermsHit, TokenBloomAgg}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-file term-Bloom index for the grep surface — the prunable remnant of
@@ -75,12 +75,15 @@ object TermIndex {
                           id: Long): DataFrame =
     spark.read.parquet(versionDir(routedPath, id))
 
-  /** Grep-compatible tokenization: `split(lower(text), "\\W+")` (Java \W =
-    * ASCII word complement), empties included — the aggregate skips them.
-    * MUST stay in lockstep with Grep.tokens / ProximityMatch or pruning
-    * turns unsound; GrepSpec pins the equivalence end-to-end.
+  /** The byte-scan predicates' tokens (ByteScan): maximal ASCII `\w` runs
+    * (Java's `\W` is the ASCII word complement), empties included — the
+    * aggregate skips them and folds A-Z itself. Never `lower(text)` first:
+    * Unicode lowering maps U+212A (Kelvin sign) to `k` and U+0130 to `i`
+    * plus a combining dot, growing tokens the predicates never see, and
+    * a missing token prunes a matching file. TermIndexSpec pins
+    * indexed ≡ unindexed on such text.
     */
-  private def tokensCol = split(lower(col("text")), "\\W+")
+  private[alco] def tokensCol: Column = split(col("text"), "\\W+")
 
   /** Build (or incrementally refresh) the index for the CURRENT committed
     * snapshot of `outRoot`'s routed table. No-op returning the existing

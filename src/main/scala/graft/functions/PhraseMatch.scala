@@ -32,8 +32,9 @@ import org.apache.spark.unsafe.types.UTF8String
 case class PhraseMatch(child: Expression, terms: Seq[String])
   extends UnaryExpression {
   require(terms.nonEmpty, "phrase requires at least one term")
-  require(terms.map(_.toLowerCase).forall(t => t.nonEmpty && t.forall(c =>
-    (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '_')),
+  require(terms.map(_.toLowerCase(java.util.Locale.ROOT)).forall(t =>
+    t.nonEmpty && t.forall(c =>
+      (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '_')),
     "phrase fast path requires pure word-char terms (caller falls back to rlike)")
 
   override def dataType: DataType = BooleanType
@@ -77,7 +78,7 @@ object PhraseMatch {
                             pi: Array[Int])
 
   def compile(terms: Seq[String]): Compiled = {
-    val lowered = terms.map(_.toLowerCase)
+    val lowered = terms.map(_.toLowerCase(java.util.Locale.ROOT))
     val distinct = lowered.distinct
     val pattern = lowered.map(distinct.indexOf).toArray
     val pi = new Array[Int](pattern.length)

@@ -44,8 +44,8 @@ case class ProximityMatch(child: Expression, terms: Seq[String], span: Int)
   }
 
   @transient private lazy val termBytes: Array[Array[Byte]] =
-    terms.map(_.toLowerCase.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .toArray
+    terms.map(_.toLowerCase(java.util.Locale.ROOT)
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
 
   override def nullSafeEval(input: Any): Any =
     ProximityMatch.matches(input.asInstanceOf[UTF8String], termBytes, span)

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.DataType
   *    subexpression elimination, unlike ProjectExec), so the quality/lang
   *    predicates — ~15 `text_profile(text)` references after alias
   *    substitution — pay ~15 byte scans per row; evaluating the predicate
-  *    ONCE behind this barrier halves the measured filter cost (QDebug r6:
+  *    ONCE behind this barrier halves the measured filter cost (round-6 A/B:
   *    0.43-0.50 s inline vs 0.22-0.25 s projected, 100k docs, warm).
   *
   * The VALUE is still fully deterministic in the row — only the optimizer

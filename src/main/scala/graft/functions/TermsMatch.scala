@@ -82,15 +82,13 @@ object TermsMatch {
                             emptyMult: Int)
 
   def compile(terms: Seq[String]): Compiled = {
-    val lowered = terms.map(_.toLowerCase)
+    val lowered = terms.map(_.toLowerCase(java.util.Locale.ROOT))
     val emptyMult = lowered.count(_.isEmpty)
     val word = lowered.filter(t => t.nonEmpty && t.forall(c =>
-      (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '_' ||
-        (c >= 'A' && c <= 'Z')))
+      (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '_'))
     val grouped = word.groupBy(identity).toSeq.sortBy(_._1)
     Compiled(
-      grouped.map(_._1.toLowerCase
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray,
+      grouped.map(_._1.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray,
       grouped.map(_._2.size).toArray,
       emptyMult)
   }

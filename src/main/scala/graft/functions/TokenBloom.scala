@@ -28,6 +28,20 @@ object TokenBloom {
 
   def h1(token: String): Long =
     Fnv64.hashBytes(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** `h1` of the token with A-Z folded to a-z and every other byte kept —
+    * the byte-scan predicates' fold (ByteScan.eqFolded), so a stored token
+    * hashes exactly as the pre-lowered term that matches it.
+    */
+  def h1AsciiFolded(token: String): Long = {
+    val b = token.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    var i = 0
+    while (i < b.length) {
+      if (b(i) >= 'A' && b(i) <= 'Z') b(i) = (b(i) + 32).toByte
+      i += 1
+    }
+    Fnv64.hashBytes(b)
+  }
   def h2(h1: Long): Long = MinHashSlots.mix(h1, 0x517cc1b7) | 1L
 
   def set(bloom: Array[Byte], h1: Long, h2: Long): Unit = {
@@ -74,7 +88,8 @@ object TokenBloom {
 
 /** Token-set Bloom aggregate: array<string> tokens per row → one
   * `numBits`-bit bloom blob per group (group = data file in the term
-  * index). A typed `Aggregator` on the public UDAF surface: partial
+  * index). Tokens are ASCII-case-folded before hashing (`h1AsciiFolded`),
+  * so callers pass raw tokens and probe with lowered terms. A typed `Aggregator` on the public UDAF surface: partial
   * aggregation is map-side (one O(numBits/8) buffer per open group, never
   * per row), merge is a byte-wise OR (associative/commutative), and state
   * is constant-size regardless of row count — 10^12-row safe.
@@ -89,7 +104,7 @@ class TokenBloomAgg(numBits: Int)
   override def reduce(b: Array[Byte], tokens: Seq[String]): Array[Byte] = {
     if (tokens != null) tokens.foreach { t =>
       if (t != null && t.nonEmpty) {
-        val a = TokenBloom.h1(t)
+        val a = TokenBloom.h1AsciiFolded(t)
         TokenBloom.set(b, a, TokenBloom.h2(a))
       }
     }

@@ -47,7 +47,7 @@ object Curate {
     // FilterExec does no subexpression elimination — the collapsed
     // predicate referenced text_profile(text) ~15×, i.e. ~15 byte scans
     // per scanned row (measured 2× the whole filter's cost at 100k docs,
-    // QDebug r6). Behind the barrier the predicate lives in a ProjectExec,
+    // round-6 A/B). Behind the barrier the predicate lives in a ProjectExec,
     // where codegen CSE evaluates text_profile once. Values unchanged —
     // the q61/q62 oracles pin the row sets.
     import graft.functions.PushdownBarrier.barrier

@@ -37,7 +37,7 @@ object Dedup {
     * partial collapse — duplicate-heavy partitions shrink before the wire).
     * The previous keepers-semi-join shape computed the upstream chain twice
     * (both join sides re-derive `df`) and shuffled three times — measured
-    * 2× the whole curate chain's cost at 100k docs (QDebug, round 4).
+    * 2× the whole curate chain's cost at 100k docs (round-4 A/B).
     *
     * PRECONDITION: `idCol` must be unique across `df` (ADVICE r4, low).
     * With duplicate ids over DISTINCT texts, each text group keeps its own

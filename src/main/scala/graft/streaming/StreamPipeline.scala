@@ -163,11 +163,4 @@ object StreamPipeline {
       .lastOption
       .map { case (_, d) => spark.read.parquet(d.getAbsolutePath) }
   }
-
-  /** Streaming dedup (REPLACE semantics, O34): drop duplicate
-    * (conv_id, turn_idx) within the watermark horizon.
-    */
-  def dedupStream(df: DataFrame): DataFrame =
-    df.withWatermark("ts", "1 day")
-      .dropDuplicatesWithinWatermark("conv_id", "turn_idx")
 }

@@ -1,8 +1,8 @@
 package graft.alco
 
 import graft.SparkSpec
-import graft.functions.TokenBloom
-import org.apache.spark.sql.functions.{col, concat, lit, when}
+import graft.functions.{BloomTermsHit, TokenBloom, TokenBloomAgg}
+import org.apache.spark.sql.functions.{col, concat, lit, monotonically_increasing_id, when}
 
 class TermIndexSpec extends SparkSpec {
 
@@ -221,6 +221,84 @@ class TermIndexSpec extends SparkSpec {
       val b3 = TermIndex.build(spark, out, numBits = 1 << 16).get
       assert(b3.freshFiles > 0, "compacted files must re-index")
       assert(queries.map(rows) == before, "post-compaction rebuild changed a result")
+    }
+  }
+
+  test("pruning never changes a grep answer on non-ASCII or null/empty text") {
+    // Unicode lowering maps U+212A (Kelvin sign) to `k` and U+0130 to `i`
+    // plus U+0307, while the byte-scan predicates fold ASCII only: blooms
+    // built from lower(text) held `zzvortexk` where the predicates see the
+    // token `zzvortex`, and an indexed MatchAll(zzvortex) lost its rows
+    val suffixes = Seq(
+      " zzvortex\u212A", // Kelvin sign
+      " ZZISTAN\u0130BUL", // dotted capital I
+      " zzd\u0131sk", // dotless small i
+      " zzcyr Привет мир", // Cyrillic
+      " zzcafe\u0301 zzna\u0308ive", // combining marks
+      " ZZISTAN\u0130BUL zzd\u0131sk")
+    val generated = Gen.turns(spark, 5000L, seed = 21L).collect()
+      .sortBy(t => (t.conv_id, t.turn_idx))
+    val chat = generated.filterNot(t =>
+      t.text.startsWith("CALL") || t.text.startsWith("RESULT"))
+    // in each of 150 blocks of 20 chat turns, the first six take one suffix each
+    val suffixOf = chat.zipWithIndex.collect {
+      case (t, i) if i % 20 < suffixes.size && i / 20 < 150 =>
+        (t.conv_id, t.turn_idx) -> suffixes(i % 20)
+    }.toMap
+    assert(suffixOf.size == 150 * suffixes.size)
+    val ts = generated.head.ts
+    // null and empty text are quarantined: the table never holds them
+    val input = generated.map(t => t.copy(text =
+        t.text + suffixOf.getOrElse((t.conv_id, t.turn_idx), ""))) ++
+      Seq(Turn("conv_nulltext", 0, "user", null, "", ts),
+        Turn("conv_emptytext", 0, "user", "", "", ts))
+    val dir = tmpDir("termindex_unicode")
+    import spark.implicits._
+    Pipeline.run(spark, input.toSeq.toDS().toDF(), dir, Pipeline.Config())
+    val rp = s"$dir/routed"
+
+    val modes = Seq(
+      Seq("zzvortex") -> Grep.MatchAll,
+      Seq("ZZVORTEX", "zzcafe") -> Grep.MatchAny,
+      Seq("ZZISTAN", "BUL") -> Grep.MatchAll,
+      Seq("привет", "zzcyr") -> Grep.MatchAny,
+      Seq("", "zzd") -> Grep.MatchAny, // "" hits text ending in a separator
+      Seq("zzd", "sk") -> Grep.MatchPhrase,
+      Seq("zzna\u0308ive") -> Grep.MatchPhrase, // rlike fallback
+      Seq(" zzvortexk") -> Grep.MatchPhrase, // rlike fallback
+      Seq("zzistan", "zzd", "zzcyr") -> Grep.MatchQuorum(2),
+      Seq("bul", "zzistan") -> Grep.MatchProximity(2),
+      Seq("ZZVORTEX\u212A") -> Grep.MatchAny)
+    val queries = modes.map { case (terms, mode) =>
+      Grep.Query(terms = terms, mode = mode, limit = 1000000) }
+    def keys(q: Grep.Query) = Grep.query(spark, rp, q).collect()
+      .map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx"))).toSet
+    val unindexed = queries.map(keys)
+    assert(unindexed.head.size == 150, "every Kelvin-suffixed turn matches")
+    TermIndex.build(spark, dir, numBits = 1 << 16)
+    queries.zip(unindexed).foreach { case (q, before) =>
+      val after = keys(q)
+      val same = after == before
+      assert(same, s"pruning changed ${q.mode} ${q.terms}: " +
+        s"${before.size} rows unindexed, ${after.size} indexed")
+    }
+    val pr = TermIndex.pruneFiles(spark, rp, Seq("zzvortex"), 1).get
+    assert(pr.keep.nonEmpty && pr.keep.size < pr.total,
+      s"the Kelvin probe must prune: kept ${pr.keep.size} of ${pr.total}")
+
+    // row level, null and empty text included: a row a predicate accepts
+    // has a bloom that passes the query's probe
+    val rows = (suffixes.map(_.trim) ++ suffixes ++ Seq(null, "", "!"))
+      .toDF("text").withColumn("id", monotonically_increasing_id()).cache()
+    val blooms = rows.groupBy("id")
+      .agg(TokenBloomAgg.token_bloom(TermIndex.tokensCol, 1 << 12).as("bloom"))
+    queries.foreach { q =>
+      Grep.probePlan(q).foreach { case (toks, minMatch) =>
+        val missed = rows.filter(Grep.matchPredicate(q.terms, q.mode))
+          .join(blooms, "id")
+          .filter(BloomTermsHit.bloom_terms_hit(col("bloom"), toks) < minMatch)
+        assert(missed.isEmpty, s"probe drops a matching row: ${q.mode} ${q.terms}")
+      }
     }
   }
 }

@@ -1,10 +1,31 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 class ExprSpec extends SparkSpec {
   import spark.implicits._
+
+  /** `cols` over `df` with generated code only, then interpreted only.
+    * Whole-stage codegen is off, so the codegen factory mode alone picks
+    * how the projection evaluates. `df` must not be a bare local relation:
+    * the optimizer would fold the projection, interpreted, before either
+    * mode applies.
+    */
+  private def codegenAndInterpreted(df: DataFrame,
+                                    cols: Column*): (Seq[Row], Seq[Row]) = {
+    def eval(mode: String): Seq[Row] = {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      df.select(cols: _*).collect().toSeq
+    }
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try (eval("CODEGEN_ONLY"), eval("NO_CODEGEN"))
+    finally {
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+      spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    }
+  }
 
   test("simhash64: codegen and interpreted paths agree; SQL registration works") {
     GraftFunctions.register(spark)
@@ -177,15 +198,10 @@ class ExprSpec extends SparkSpec {
     val nulled = Seq[String](null).toDF("text")
       .select(GraftFunctions.proximity_match($"text", Seq("a"), 2)).collect()
     assert(nulled(0).isNullAt(0))
-    // interpreted eval path agrees with codegen
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
-      val interp = df.select(GraftFunctions.proximity_match($"text", Seq("spark", "table"), 4))
-        .collect().map(_.getBoolean(0)).toSeq
-      val gen = df.select(hofProximity(Seq("spark", "table"), 4).cast("boolean"))
-        .collect().map(_.getBoolean(0)).toSeq
-      assert(interp == gen)
-    } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    // generated code ≡ interpreted eval of the same expression
+    val (gen, interp) = codegenAndInterpreted(df,
+      GraftFunctions.proximity_match($"text", Seq("spark", "table"), 4))
+    assert(gen == interp)
   }
 
   test("cosine_sim equals the zip_with/aggregate formulation bit-for-bit") {
@@ -315,15 +331,11 @@ class ExprSpec extends SparkSpec {
     val nulled = Seq[String](null).toDF("text")
       .select(GraftFunctions.terms_match($"text", Seq("a"), 1)).collect()
     assert(nulled(0).isNullAt(0))
-    // interpreted eval agrees with codegen
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
-      val interp = df.select(GraftFunctions.terms_match($"text", Seq("spark", "table"), 2))
-        .collect().map(_.getBoolean(0)).toSeq
-      val gen = df.select(refAll(Seq("spark", "table"))).collect()
-        .map(_.getBoolean(0)).toSeq
-      assert(interp == gen)
-    } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    // generated code ≡ interpreted eval of the same expression
+    val (gen, interp) = codegenAndInterpreted(df,
+      GraftFunctions.terms_match($"text", Seq("spark", "table"), 2),
+      GraftFunctions.terms_match($"text", Seq("spark", "", "x1"), 1))
+    assert(gen == interp)
   }
 
   test("phrase_match equals the rlike formulation on fuzzed corpora") {
@@ -366,14 +378,17 @@ class ExprSpec extends SparkSpec {
     val nulled = Seq[String](null).toDF("text")
       .select(GraftFunctions.phrase_match($"text", Seq("a"))).collect()
     assert(nulled(0).isNullAt(0))
-    // interpreted eval agrees with codegen
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
-      val interp = df.select(GraftFunctions.phrase_match($"text",
-        Seq("spark", "table"))).collect().map(_.getBoolean(0)).toSeq
-      val gen = df.select(refPhrase(Seq("spark", "table"))).collect()
-        .map(_.getBoolean(0)).toSeq
-      assert(interp == gen)
-    } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    // generated code ≡ interpreted eval of the same expression, for all
+    // three byte-scan matches, over this corpus plus null and non-ASCII
+    // text (Kelvin sign, dotted/dotless I, Cyrillic, combining marks)
+    val edge = (texts ++ Seq(null, "spark table\u212A", "SPARK \u0130 table",
+        "spark\u0131 table", "Привет spark, table мир", "spark\u0301 table"))
+      .toDF("text").cache()
+    val (gen, interp) = codegenAndInterpreted(edge,
+      GraftFunctions.terms_match($"text", Seq("spark", "table"), 2),
+      GraftFunctions.phrase_match($"text", Seq("spark", "table")),
+      GraftFunctions.proximity_match($"text", Seq("spark", "table"), 2))
+    assert(gen == interp)
+    assert(gen.count(_.isNullAt(0)) == 1 && gen.exists(_.getBoolean(1)))
   }
 }
