@@ -1,8 +1,8 @@
 package graft.alco
 
 import java.sql.Timestamp
-import java.util.Locale
 
+import graft.functions.ByteScan
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -55,13 +55,13 @@ object Grep {
     */
   def matchPredicate(terms: Seq[String], mode: MatchMode): Column = {
     if (terms.isEmpty) return lit(true)
-    val lowered = terms.map(_.toLowerCase(Locale.ROOT))
+    val folded = terms.map(ByteScan.foldAscii)
     mode match {
       case MatchAny =>
-        graft.functions.GraftFunctions.terms_match(col("text"), lowered, 1)
+        graft.functions.GraftFunctions.terms_match(col("text"), folded, 1)
       case MatchAll =>
-        graft.functions.GraftFunctions.terms_match(col("text"), lowered,
-          lowered.length)
+        graft.functions.GraftFunctions.terms_match(col("text"), folded,
+          folded.length)
       case MatchPhrase =>
         // Sphinx "phrase": the terms occur as consecutive TOKENS, not as a
         // raw substring — "retry logic" must not match "retry logical…".
@@ -73,13 +73,13 @@ object Grep {
         // (fuzzed vs rlike) and oracle-pinned by q43. Terms carrying
         // non-word chars (or empty) keep the regex engine: there \W+ can
         // overlap term content and the token argument breaks down. `(?i)`
-        // without `(?u)` folds ASCII only, as the byte scans and the
-        // term-index blooms do; `lower(text)` would also turn U+212A into
-        // `k` and match a token no bloom holds, so pruning would drop the row.
-        if (lowered.forall(pureToken))
-          graft.functions.GraftFunctions.phrase_match(col("text"), lowered)
+        // without `(?u)` folds A-Z only, as foldAscii, the byte scans and
+        // the blooms do; `lower(text)` would turn U+212A into `k`, a token
+        // no bloom holds, so pruning would drop the row.
+        if (folded.forall(pureToken))
+          graft.functions.GraftFunctions.phrase_match(col("text"), folded)
         else {
-          val pat = lowered.map(java.util.regex.Pattern.quote)
+          val pat = folded.map(java.util.regex.Pattern.quote)
             .mkString("(?i)\\b", "\\W+", "\\b")
           col("text").rlike(pat)
         }
@@ -88,14 +88,14 @@ object Grep {
         // formulation was constant-true, even for null text); TermsMatch
         // itself requires minHits >= 1
         if (k <= 0) lit(true)
-        else graft.functions.GraftFunctions.terms_match(col("text"), lowered, k)
+        else graft.functions.GraftFunctions.terms_match(col("text"), folded, k)
       case MatchProximity(span) =>
         // ∃ window of `span` consecutive tokens containing every term —
         // a codegen'd single-pass byte scan (graft.functions.ProximityMatch;
         // the interpreted exists/slice HOF chain it replaced was
         // CodegenFallback and O(tokens·terms·span)). One projection: no
         // shuffle, no UDF, no array materialization.
-        graft.functions.GraftFunctions.proximity_match(col("text"), lowered, span)
+        graft.functions.GraftFunctions.proximity_match(col("text"), folded, span)
     }
   }
 
@@ -153,28 +153,28 @@ object Grep {
     * notTerms never prune (negation has no bloom form).
     */
   private[alco] def probePlan(q: Query): Option[(Seq[String], Int)] = {
-    val lowered = q.terms.map(_.toLowerCase(Locale.ROOT))
-    if (lowered.isEmpty) return None
+    val folded = q.terms.map(ByteScan.foldAscii)
+    if (folded.isEmpty) return None
     q.mode match {
       case MatchAny =>
-        val pure = lowered.filter(pureToken).distinct
-        if (pure.isEmpty || lowered.contains("")) None else Some((pure, 1))
+        val pure = folded.filter(pureToken).distinct
+        if (pure.isEmpty || folded.contains("")) None else Some((pure, 1))
       case MatchAll | MatchProximity(_) =>
-        if (!lowered.forall(pureToken)) None
-        else { val d = lowered.distinct; Some((d, d.size)) }
+        if (!folded.forall(pureToken)) None
+        else { val d = folded.distinct; Some((d, d.size)) }
       case MatchPhrase =>
-        val toks = lowered.flatMap(_.split("\\W+")).filter(_.nonEmpty).distinct
+        val toks = folded.flatMap(_.split("\\W+")).filter(_.nonEmpty).distinct
         if (toks.isEmpty) None else Some((toks, toks.size))
       case MatchQuorum(k) =>
-        if (!lowered.forall(pureToken)) None
+        if (!folded.forall(pureToken)) None
         else {
           // quorum counts each LISTED term, so duplicates let one distinct
           // token contribute its multiplicity — the sound bound is the
           // smallest number of distinct terms whose multiplicities can
           // already reach k (greedy over descending multiplicity), not k
           // itself (["a","a","b"]/2 is satisfied by "a" alone).
-          val d = lowered.distinct
-          val mults = lowered.groupBy(identity).values.map(_.size).toSeq
+          val d = folded.distinct
+          val mults = folded.groupBy(identity).values.map(_.size).toSeq
             .sortBy(-_)
           val need = mults.scanLeft(0)(_ + _).indexWhere(_ >= k)
           Some((d, if (need < 0) d.size else need))

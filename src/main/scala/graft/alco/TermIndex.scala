@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * (copy-on-write merge/compaction produce NEW names), so a rebuild after
   * N ingest batches reuses every prior bloom and scans only the new files'
   * text. Versions are published atomically under
-  * `_termindex/v-<snapshotId>` (tmp dir + rename, `_SUCCESS`-guarded);
+  * `_termindex2/v-<snapshotId>` (tmp dir + rename, `_SUCCESS`-guarded);
   * readers take the newest complete version and treat unindexed files as
   * always-scan, so a stale index is merely less effective, never wrong —
   * the same property that makes crash/concurrent-build races harmless
@@ -48,7 +48,10 @@ object TermIndex {
     */
   final case class Prune(keep: Seq[String], total: Int, firstCommitted: String)
 
-  private def indexRoot(routedPath: String): String = s"$routedPath/_termindex"
+  /** Not `_termindex`: blooms there came from `lower(text)` and can lack
+    * tokens the byte scans match (U+212A), so they are never reused.
+    */
+  private def indexRoot(routedPath: String): String = s"$routedPath/_termindex2"
   private def versionDir(routedPath: String, id: Long): String =
     s"${indexRoot(routedPath)}/v-$id"
 
@@ -186,13 +189,13 @@ object TermIndex {
   }
 
   /** Delete index versions beyond the newest `keep` (concurrent readers of
-    * a just-superseded version get a grace window of one more build), and
-    * sweep `.build-*` staging dirs a crashed builder left behind. A LIVE
-    * concurrent build must never lose its staging (the Bench sweep lesson,
-    * ADVICE r4) — and the staging dir's own mtime is set at job start and
-    * never advances, so the quiet test walks the TREE for the newest mtime
-    * (in-flight tasks keep creating attempt files inside `_temporary`) and
-    * requires a full hour of silence. A build quiet for an hour yet still
+    * a just-superseded version get a grace window of one more build) and
+    * the old `_termindex` root, and sweep `.build-*` staging dirs a crashed
+    * builder left behind. A LIVE concurrent build must never lose its
+    * staging (the Bench sweep lesson, ADVICE r4) — and the staging dir's
+    * own mtime is set at job start and never advances, so the quiet test
+    * walks the TREE for the newest mtime (in-flight tasks keep creating
+    * attempt files inside `_temporary`) and requires a full hour of silence. A build quiet for an hour yet still
     * alive would have to write nothing at all in that hour — at that point
     * it is indistinguishable from a crash and loses its (re-runnable)
     * staging, never any published data.
@@ -200,6 +203,7 @@ object TermIndex {
   private def vacuum(spark: SparkSession, routedPath: String, keep: Int): Unit = {
     val root = new org.apache.hadoop.fs.Path(indexRoot(routedPath))
     val f = fs(spark, routedPath)
+    f.delete(new org.apache.hadoop.fs.Path(s"$routedPath/_termindex"), true)
     if (!f.exists(root)) return
     val entries = f.listStatus(root).toSeq.filter(_.isDirectory)
     val ids = entries.filter(_.getPath.getName.startsWith("v-"))
@@ -220,7 +224,7 @@ object TermIndex {
       .foreach(s => scala.util.Try(f.delete(s.getPath, true)))
   }
 
-  /** The files a grep needing >= `minMatch` of `tokens` (pre-lowered pure
+  /** The files a grep needing >= `minMatch` of `tokens` (pre-folded pure
     * tokens) must scan, under the current committed snapshot. None when no
     * manifest or no index exists (caller falls back to the full table), and
     * None when the probe keeps more than [[PruneUselessFrac]] of the files

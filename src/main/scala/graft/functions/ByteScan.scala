@@ -11,16 +11,25 @@ import org.apache.spark.unsafe.types.UTF8String
   * Tokens are maximal `[A-Za-z0-9_]+` byte runs (Java regex `\w` is
   * ASCII-classed; ASCII bytes never occur inside a multi-byte UTF-8
   * sequence, so byte runs = char runs), compared ASCII-case-folded
-  * against pre-lowered terms.
+  * against terms folded by [[foldAscii]].
   */
-private[functions] object ByteScan {
+private[graft] object ByteScan {
+
+  /** A term as every match compares it: A-Z folded to a-z, every other
+    * char kept as typed. Never `toLowerCase`: Unicode lowering turns U+212A
+    * (Kelvin sign) into the pure token `k` and `Привет` into `привет`, and
+    * neither then matches the text it was copied from, because the scans
+    * (and the rlike phrase fallback's `(?i)`) fold text bytes A-Z only.
+    */
+  def foldAscii(term: String): String =
+    term.map(c => if (c >= 'A' && c <= 'Z') (c + 32).toChar else c)
 
   @inline def isWordByte(b: Byte): Boolean =
     (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') ||
       (b >= '0' && b <= '9') || b == '_'
 
   /** ASCII-case-insensitive equality of text[start, start+len) vs `term`
-    * (term is pre-lowered; token bytes are word bytes by construction).
+    * (term is pre-folded; token bytes are word bytes by construction).
     */
   def eqFolded(text: UTF8String, start: Int, len: Int,
                term: Array[Byte]): Boolean = {

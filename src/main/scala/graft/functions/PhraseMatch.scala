@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * it replaces runs the java.util.regex engine (NFA backtracking + a full
   * lowercased copy of the text) per row.
   *
-  * Exact equivalence with the rlike shape holds when every (lowered) term
+  * Exact equivalence with the rlike shape holds when every (folded) term
   * is a non-empty all-word-char token — the only case Grep compiles to this
   * expression (others keep rlike): in `\bt1\W+t2…\b`, each `\b` plus the
   * `\W+` separators force every term to align with a maximal
@@ -32,7 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
 case class PhraseMatch(child: Expression, terms: Seq[String])
   extends UnaryExpression {
   require(terms.nonEmpty, "phrase requires at least one term")
-  require(terms.map(_.toLowerCase(java.util.Locale.ROOT)).forall(t =>
+  require(terms.map(ByteScan.foldAscii).forall(t =>
     t.nonEmpty && t.forall(c =>
       (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '_')),
     "phrase fast path requires pure word-char terms (caller falls back to rlike)")
@@ -68,7 +68,7 @@ case class PhraseMatch(child: Expression, terms: Seq[String])
 
 object PhraseMatch {
 
-  /** Distinct lowered term bytes, the phrase as a sequence of ids into
+  /** Distinct folded term bytes, the phrase as a sequence of ids into
     * them, and the KMP prefix function over that id sequence
     * (serializable — shipped to executors inside the expression).
     * `pi(i)` = length of the longest proper prefix of pattern[0..i] that is
@@ -78,9 +78,9 @@ object PhraseMatch {
                             pi: Array[Int])
 
   def compile(terms: Seq[String]): Compiled = {
-    val lowered = terms.map(_.toLowerCase(java.util.Locale.ROOT))
-    val distinct = lowered.distinct
-    val pattern = lowered.map(distinct.indexOf).toArray
+    val folded = terms.map(ByteScan.foldAscii)
+    val distinct = folded.distinct
+    val pattern = folded.map(distinct.indexOf).toArray
     val pi = new Array[Int](pattern.length)
     var i = 1
     while (i < pattern.length) {

@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * byte runs — exactly `split(lower(text), "\\W+")` with empties dropped,
   * since Java `\W` is ASCII-classed and ASCII bytes never occur inside a
   * multi-byte UTF-8 sequence — compared case-folded against the
-  * pre-lowered terms. A last-seen position per term turns the ∃-window
+  * pre-folded terms. A last-seen position per term turns the ∃-window
   * check into a sliding minimum: after a token matches term t at position
   * j, the window [j-span+1, j] contains all terms iff min(lastSeen) ≥
   * j-span+1. O(bytes + matches·terms) per row vs the HOF chain's
@@ -44,7 +44,7 @@ case class ProximityMatch(child: Expression, terms: Seq[String], span: Int)
   }
 
   @transient private lazy val termBytes: Array[Array[Byte]] =
-    terms.map(_.toLowerCase(java.util.Locale.ROOT)
+    terms.map(ByteScan.foldAscii(_)
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
 
   override def nullSafeEval(input: Any): Any =

@@ -75,16 +75,16 @@ case class TermsMatch(child: Expression, terms: Seq[String], minHits: Int)
 
 object TermsMatch {
 
-  /** Pre-lowered distinct word-char terms + multiplicities (serializable —
+  /** Pre-folded distinct word-char terms + multiplicities (serializable —
     * shipped to executors inside the expression).
     */
   final case class Compiled(termBytes: Array[Array[Byte]], mults: Array[Int],
                             emptyMult: Int)
 
   def compile(terms: Seq[String]): Compiled = {
-    val lowered = terms.map(_.toLowerCase(java.util.Locale.ROOT))
-    val emptyMult = lowered.count(_.isEmpty)
-    val word = lowered.filter(t => t.nonEmpty && t.forall(c =>
+    val folded = terms.map(ByteScan.foldAscii)
+    val emptyMult = folded.count(_.isEmpty)
+    val word = folded.filter(t => t.nonEmpty && t.forall(c =>
       (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '_'))
     val grouped = word.groupBy(identity).toSeq.sortBy(_._1)
     Compiled(

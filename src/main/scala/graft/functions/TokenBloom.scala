@@ -16,9 +16,9 @@ import org.apache.spark.sql.types._
   * Layout: a byte array of `numBits/8` bytes (numBits a power of two, so
   * bit positions come from a mask, never a modulo). Per token, k=6 bit
   * positions via Kirsch-Mitzenmacher double hashing: pos_i = h1 + i·h2,
-  * with h1 = FNV-1a over the token's UTF-8 bytes (the repo's shared
-  * deterministic token hash) and h2 = fmix64(h1) | 1 (odd, so the probe
-  * sequence cycles the full power-of-two ring). Everything is derivable
+  * with h1 = FNV-1a over the token's UTF-8 bytes, A-Z folded (the repo's
+  * shared deterministic token hash) and h2 = fmix64(h1) | 1 (odd, so the
+  * probe sequence cycles the full power-of-two ring). Everything is derivable
   * from the blob alone — numBits = bloom.length·8 — so index versions
   * built with different sizes stay probe-compatible side by side.
   */
@@ -26,14 +26,11 @@ object TokenBloom {
   /** Bits set per token. Fixed: stored blooms must outlive config changes. */
   final val K = 6
 
-  def h1(token: String): Long =
-    Fnv64.hashBytes(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  /** `h1` of the token with A-Z folded to a-z and every other byte kept —
-    * the byte-scan predicates' fold (ByteScan.eqFolded), so a stored token
-    * hashes exactly as the pre-lowered term that matches it.
+  /** FNV-1a over the token's UTF-8 bytes with A-Z folded to a-z and every
+    * other byte kept — the byte scans' fold (ByteScan), so a raw stored
+    * token hashes exactly as the folded term that matches it.
     */
-  def h1AsciiFolded(token: String): Long = {
+  def h1(token: String): Long = {
     val b = token.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     var i = 0
     while (i < b.length) {
@@ -71,8 +68,8 @@ object TokenBloom {
     test(bloom, a, h2(a))
   }
 
-  /** How many of `terms` (pre-lowered) might be contained — the static
-    * helper shared by BloomTermsHit's interpreted eval and generated code.
+  /** How many of `terms` might be contained — the static helper shared
+    * by BloomTermsHit's interpreted eval and generated code.
     * `hashes` holds (h1, h2) pairs flattened.
     */
   def hits(bloom: Array[Byte], hashes: Array[Long]): Int = {
@@ -88,11 +85,12 @@ object TokenBloom {
 
 /** Token-set Bloom aggregate: array<string> tokens per row → one
   * `numBits`-bit bloom blob per group (group = data file in the term
-  * index). Tokens are ASCII-case-folded before hashing (`h1AsciiFolded`),
-  * so callers pass raw tokens and probe with lowered terms. A typed `Aggregator` on the public UDAF surface: partial
-  * aggregation is map-side (one O(numBits/8) buffer per open group, never
-  * per row), merge is a byte-wise OR (associative/commutative), and state
-  * is constant-size regardless of row count — 10^12-row safe.
+  * index). `h1` folds A-Z before hashing, so callers pass raw tokens and
+  * probe with folded terms. A typed `Aggregator` on the public UDAF
+  * surface: partial aggregation is map-side (one O(numBits/8) buffer per
+  * open group, never per row), merge is a byte-wise OR
+  * (associative/commutative), and state is constant-size regardless of
+  * row count — 10^12-row safe.
   */
 class TokenBloomAgg(numBits: Int)
   extends Aggregator[Seq[String], Array[Byte], Array[Byte]] {
@@ -104,7 +102,7 @@ class TokenBloomAgg(numBits: Int)
   override def reduce(b: Array[Byte], tokens: Seq[String]): Array[Byte] = {
     if (tokens != null) tokens.foreach { t =>
       if (t != null && t.nonEmpty) {
-        val a = TokenBloom.h1AsciiFolded(t)
+        val a = TokenBloom.h1(t)
         TokenBloom.set(b, a, TokenBloom.h2(a))
       }
     }

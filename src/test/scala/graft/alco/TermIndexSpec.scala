@@ -119,7 +119,7 @@ class TermIndexSpec extends SparkSpec {
 
   test("vacuum sweeps stale crashed-build staging but never live staging") {
     TermIndex.build(spark, out, numBits = 1 << 16)
-    val idxRoot = java.nio.file.Paths.get(s"$routedPath/_termindex")
+    val idxRoot = java.nio.file.Paths.get(s"$routedPath/_termindex2")
     val stale = idxRoot.resolve(".build-stale")
     val live = idxRoot.resolve(".build-live")
     // a long-running build's staging dir keeps its START mtime while tasks
@@ -233,7 +233,7 @@ class TermIndexSpec extends SparkSpec {
       " zzvortex\u212A", // Kelvin sign
       " ZZISTAN\u0130BUL", // dotted capital I
       " zzd\u0131sk", // dotless small i
-      " zzcyr Привет мир", // Cyrillic
+      " zzcyr Привет, мир", // Cyrillic
       " zzcafe\u0301 zzna\u0308ive", // combining marks
       " ZZISTAN\u0130BUL zzd\u0131sk")
     val generated = Gen.turns(spark, 5000L, seed = 21L).collect()
@@ -269,12 +269,23 @@ class TermIndexSpec extends SparkSpec {
       Seq("zzistan", "zzd", "zzcyr") -> Grep.MatchQuorum(2),
       Seq("bul", "zzistan") -> Grep.MatchProximity(2),
       Seq("ZZVORTEX\u212A") -> Grep.MatchAny)
-    val queries = modes.map { case (terms, mode) =>
-      Grep.Query(terms = terms, mode = mode, limit = 1000000) }
+    // rlike fallback phrases whose non-ASCII letters keep their case: each
+    // matches the 150 turns whose text it was copied from
+    val ownText = Seq(Seq("Привет,", "мир"), Seq("zzvortex\u212A"))
+    val queries = (modes ++ ownText.map(_ -> Grep.MatchPhrase)).map {
+      case (terms, mode) =>
+        Grep.Query(terms = terms, mode = mode, limit = 1000000) }
     def keys(q: Grep.Query) = Grep.query(spark, rp, q).collect()
       .map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx"))).toSet
     val unindexed = queries.map(keys)
     assert(unindexed.head.size == 150, "every Kelvin-suffixed turn matches")
+    assert(unindexed.takeRight(ownText.size).map(_.size) == ownText.map(_ => 150),
+      "a phrase must match the text it was copied from")
+    // a sidecar left by the earlier lower(text) tokenizer is neither read
+    // nor reused; this one claims that no file holds any token
+    val snap = Manifest.latest(rp).get
+    snap.files.map(fl => (fl, new Array[Byte](1 << 13))).toDF("file", "bloom")
+      .write.parquet(s"$rp/_termindex/v-${snap.snapshotId}")
     TermIndex.build(spark, dir, numBits = 1 << 16)
     queries.zip(unindexed).foreach { case (q, before) =>
       val after = keys(q)
@@ -282,6 +293,8 @@ class TermIndexSpec extends SparkSpec {
       assert(same, s"pruning changed ${q.mode} ${q.terms}: " +
         s"${before.size} rows unindexed, ${after.size} indexed")
     }
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$rp/_termindex")),
+      "the build deletes the earlier tokenizer's sidecar")
     val pr = TermIndex.pruneFiles(spark, rp, Seq("zzvortex"), 1).get
     assert(pr.keep.nonEmpty && pr.keep.size < pr.total,
       s"the Kelvin probe must prune: kept ${pr.keep.size} of ${pr.total}")

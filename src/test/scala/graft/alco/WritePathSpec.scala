@@ -63,7 +63,7 @@ class WritePathSpec extends SparkSpec {
     // under Hadoop's default umask (022): data files and their .crc
     // sidecars rw-r--r--, created directories rwxr-xr-x
     val written = walk(s"$out/routed").filter(p =>
-      p.toString.contains("/tool_key=") || p.toString.contains("/_termindex/v-"))
+      p.toString.contains("/tool_key=") || p.toString.contains("/_termindex2/v-"))
     val (dirs, files) = written.partition(Files.isDirectory(_))
     assert(files.exists(_.getFileName.toString.endsWith(".parquet")))
     assert(files.exists(_.getFileName.toString.endsWith(".crc")))
