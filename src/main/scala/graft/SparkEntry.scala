@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    TableRead(s, Seq(s"$dir/$name.parquet"))
 
   /** Flagship: the full alco parse→enrich→route→aggregate loop over a
     * deterministically generated transcripts table (BASELINE.json

@@ -64,8 +64,7 @@ object Compact {
     fs.delete(tmpPath, true) // stale staging from a crashed compaction
 
     val targetFiles = parts.flatMap(targets).map(f => s"$routedPath/$f")
-    def readTargets = spark.read.option("basePath", routedPath)
-      .parquet(targetFiles: _*)
+    def readTargets = TableRead(spark, targetFiles, Some(routedPath))
 
     // census for the row-count invariant from the source files' parquet
     // FOOTERS — driver-side metadata, no second data scan
@@ -91,24 +90,9 @@ object Compact {
     }
 
     // move outputs into the live partition dirs under compact-tagged names
-    // (uncommitted until the snapshot below; a crash here leaves orphans).
-    // fs.rename reports failure by RETURNING false (dest exists, transient
-    // object-store error) — a false must abort BEFORE the staging delete,
-    // or the only copy of the rewritten rows would be destroyed and the
-    // snapshot would name a missing file.
-    val moved = parts.flatMap { p =>
-      Pipeline.listFiles(spark, s"$tmp/$p").map { name =>
-        val dest = s"compact-${snap.snapshotId}-$name"
-        val renamed = fs.rename(
-          new org.apache.hadoop.fs.Path(s"$tmp/$p/$name"),
-          new org.apache.hadoop.fs.Path(s"$routedPath/$p/$dest"))
-        if (!renamed)
-          throw new IllegalStateException(
-            s"compaction rename failed for $p/$dest — aborting before " +
-              "commit (staging retained; moved files are uncommitted orphans)")
-        s"$p/$dest"
-      }
-    }
+    // (uncommitted until the snapshot below; a crash here leaves orphans)
+    val moved = Pipeline.moveStaged(spark, tmp, routedPath, parts,
+      s"compact-${snap.snapshotId}").flatMap { case (p, names) => names.map(n => s"$p/$n") }
     fs.delete(tmpPath, true)
 
     val kept = snap.files.filterNot(f =>

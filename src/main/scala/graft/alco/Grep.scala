@@ -128,7 +128,7 @@ object Grep {
     */
   private[alco] def table(spark: SparkSession, routedPath: String): DataFrame =
     Manifest.readCommitted(spark, routedPath)
-      .getOrElse(spark.read.parquet(routedPath))
+      .getOrElse(TableRead(spark, Seq(routedPath)))
 
   private def pureToken(t: String): Boolean =
     t.nonEmpty && t.forall(c =>
@@ -194,11 +194,10 @@ object Grep {
     } match {
       case Some(p) if p.keep.isEmpty =>
         // no file can satisfy the match: keep the schema (one footer), zero rows
-        spark.read.option("basePath", routedPath)
-          .parquet(s"$routedPath/${p.firstCommitted}").filter(lit(false))
+        TableRead(spark, Seq(s"$routedPath/${p.firstCommitted}"), Some(routedPath))
+          .filter(lit(false))
       case Some(p) =>
-        spark.read.option("basePath", routedPath)
-          .parquet(p.keep.map(f => s"$routedPath/$f"): _*)
+        TableRead(spark, p.keep.map(f => s"$routedPath/$f"), Some(routedPath))
       case None => table(spark, routedPath)
     }
 

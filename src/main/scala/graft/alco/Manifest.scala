@@ -100,8 +100,7 @@ object Manifest {
   def readCommitted(spark: org.apache.spark.sql.SparkSession,
                     tableRoot: String): Option[org.apache.spark.sql.DataFrame] =
     latest(tableRoot).filter(_.files.nonEmpty).map { s =>
-      spark.read.option("basePath", tableRoot)
-        .parquet(s.files.map(f => s"$tableRoot/$f"): _*)
+      TableRead(spark, s.files.map(f => s"$tableRoot/$f"), Some(tableRoot))
     }
 
   /** Append a snapshot.

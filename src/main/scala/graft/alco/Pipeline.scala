@@ -245,8 +245,9 @@ object Pipeline {
     // on disk for fresh ones (orphans were cleaned, so all files there are
     // this batch's).
     val overlapSet = overlap.toSet
-    val carried = committedFileSet.filter(f =>
-      !touched.exists(p => f.startsWith(p + "/"))).toSeq
+    val touchedSet = touched.toSet
+    val carried = committedFileSet.filterNot(f =>
+      touchedSet.contains(f.substring(0, f.lastIndexOf('/')))).toSeq
     val newFiles = touched.flatMap { p =>
       if (overlapSet.contains(p)) mergedFiles(p).map(n => s"$p/$n")
       else listFiles(spark, s"$routedPath/$p").map(n => s"$p/$n")
@@ -350,27 +351,43 @@ object Pipeline {
     val fs = tmpPath.getFileSystem(hconf)
     fs.delete(tmpPath, true) // stale staging from a crashed merge
 
-    val df = spark.read.option("basePath", routedPath)
-      .parquet(parts.map(p => s"$routedPath/$p"): _*)
+    val df = TableRead(spark, parts.map(p => s"$routedPath/$p"), Some(routedPath))
     val mObs = new Observation(s"merge_batch_$batchId")
     TableWrite(Route.replaceSemantics(df)
       .observe(mObs, TableWrite.partitionCountMetric),
       mergeTmp, SaveMode.Overwrite, Some(cfg))
     val counts = TableWrite.partitionCounts(mObs)
-
-    // Move merge outputs into the live partition dirs (driver-side,
-    // O(#files in overlapping partitions)).
-    val moved = parts.map { p =>
-      val names = listFiles(spark, s"$mergeTmp/$p").map { name =>
-        val dest = s"merge-$batchId-$name"
-        fs.rename(new org.apache.hadoop.fs.Path(s"$mergeTmp/$p/$name"),
-          new org.apache.hadoop.fs.Path(s"$routedPath/$p/$dest"))
-        dest
-      }
-      p -> names
-    }.toMap
+    val moved = moveStaged(spark, mergeTmp, routedPath, parts, s"merge-$batchId").toMap
     fs.delete(tmpPath, true)
     (counts, moved)
+  }
+
+  /** Move a staged rewrite's files (`staging/<partition>/<name>`) into the
+    * live partition dirs as `<tag>-<name>`, uncommitted until the caller's
+    * snapshot names them (driver-side, O(#files moved)). fs.rename reports
+    * failure by RETURNING false (dest exists, transient object-store error):
+    * that aborts here, before the caller deletes the staging dir — or the
+    * snapshot would name a missing file and the only copy of its rows would
+    * be gone.
+    *
+    * @return the new file names per partition, in `parts` order
+    */
+  private[alco] def moveStaged(spark: SparkSession, staging: String,
+      routedPath: String, parts: Seq[String],
+      tag: String): Seq[(String, Seq[String])] = {
+    val fs = new org.apache.hadoop.fs.Path(staging)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    parts.map { p =>
+      p -> listFiles(spark, s"$staging/$p").map { name =>
+        val dest = s"$tag-$name"
+        if (!fs.rename(new org.apache.hadoop.fs.Path(s"$staging/$p/$name"),
+            new org.apache.hadoop.fs.Path(s"$routedPath/$p/$dest")))
+          throw new IllegalStateException(
+            s"rename failed for $p/$dest — aborting before commit " +
+              "(staging retained; moved files are uncommitted orphans)")
+        dest
+      }
+    }
   }
 
   /** Non-hidden data files directly under `dir` (driver-side metadata). */

@@ -77,7 +77,7 @@ object PipelineMain {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     try {
-      val r = Pipeline.run(spark, spark.read.parquet(inPath), outRoot,
+      val r = Pipeline.run(spark, TableRead(spark, Seq(inPath)), outRoot,
         Pipeline.Config(), batchId, writerId)
       println(
         s"""{"batch_id":${r.batchId},"snapshot_id":${r.snapshotId},""" +

@@ -77,5 +77,5 @@ object Sink {
 
   /** Registered-table read with mandatory partition-prune-friendly layout. */
   def read(spark: SparkSession, root: String, name: String) =
-    spark.read.parquet(s"$root/$name")
+    TableRead(spark, Seq(s"$root/$name"))
 }

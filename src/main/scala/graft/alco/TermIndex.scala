@@ -76,7 +76,7 @@ object TermIndex {
 
   private def readVersion(spark: SparkSession, routedPath: String,
                           id: Long): DataFrame =
-    spark.read.parquet(versionDir(routedPath, id))
+    TableRead(spark, Seq(versionDir(routedPath, id)))
 
   /** The byte-scan predicates' tokens (ByteScan): maximal ASCII `\w` runs
     * (Java's `\W` is the ASCII word complement), empties included — the
@@ -137,8 +137,7 @@ object TermIndex {
               org.apache.spark.sql.Encoders.STRING,
               org.apache.spark.sql.Encoders.STRING))
           .toDF("enc", "file")
-        Some(spark.read.option("basePath", routedPath)
-          .parquet(freshFiles.map(fl => s"$routedPath/$fl"): _*)
+        Some(TableRead(spark, freshFiles.map(fl => s"$routedPath/$fl"), Some(routedPath))
           .select(relFile.as("enc"), tokensCol.as("toks"))
           .groupBy(col("enc"))
           .agg(TokenBloomAgg.token_bloom(col("toks"), numBits).as("bloom"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.alco.{Model, Parse, TableWrite}
+import graft.alco.{Model, Parse, TableRead, TableWrite}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -161,6 +161,6 @@ object StreamPipeline {
       .filter { case (id, _) => beforeId.forall(id < _) }
       .sortBy(_._1)
       .lastOption
-      .map { case (_, d) => spark.read.parquet(d.getAbsolutePath) }
+      .map { case (_, d) => TableRead(spark, Seq(d.getAbsolutePath)) }
   }
 }

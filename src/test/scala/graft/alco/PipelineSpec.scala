@@ -152,6 +152,33 @@ class PipelineSpec extends SparkSpec {
       "vacuum leaves exactly the committed files on disk")
   }
 
+  test("a failed merge rename aborts the batch before commit and keeps the prior rows") {
+    val outR = tmpDir("pipe_merge_rename")
+    val routed = s"$outR/routed"
+    val cut = lit("2025-01-03 00:00:00").cast("timestamp")
+    Pipeline.run(spark, turns.filter($"ts" < cut).toDF(), outR, Pipeline.Config(), batchId = 0L)
+    val prior = Manifest.latest(routed).get
+    def committedRows() = Manifest.readCommitted(spark, routed).get
+      .select($"conv_id", $"turn_idx", $"text").as[(String, Int, String)]
+      .collect().toSet
+    val priorRows = committedRows()
+    // every `file:` filesystem built from the session's Hadoop conf now
+    // refuses renames into merge-… names, as Hadoop reports it: false
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val saved = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+      .map(k => k -> Option(hconf.get(k)))
+    hconf.set("fs.file.impl", classOf[MergeRenameFailsFs].getName)
+    hconf.set("fs.file.impl.disable.cache", "true")
+    try {
+      intercept[IllegalStateException] {
+        Pipeline.run(spark, turns.toDF(), outR, Pipeline.Config(), batchId = 1L)
+      }
+    } finally saved.foreach { case (k, v) => v.fold(hconf.unset(k))(hconf.set(k, _)) }
+    assert(Manifest.latest(routed).get.snapshotId == prior.snapshotId,
+      "no snapshot may name merge files that are not on disk")
+    assert(committedRows() == priorRows)
+  }
+
   test("batch idempotency is writer-scoped: a new writer's batch 0 is not masked") {
     val out4 = tmpDir("pipe_writer")
     val cut = lit("2025-01-03 00:00:00").cast("timestamp")
@@ -369,4 +396,13 @@ class PipelineSpec extends SparkSpec {
       }
       .toSet
   }
+}
+
+/** `file:` filesystem whose renames into `merge-…` names fail the way Hadoop
+  * reports a failed rename: by returning false.
+  */
+class MergeRenameFailsFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def rename(src: org.apache.hadoop.fs.Path,
+                      dst: org.apache.hadoop.fs.Path): Boolean =
+    !dst.getName.startsWith("merge-") && super.rename(src, dst)
 }
