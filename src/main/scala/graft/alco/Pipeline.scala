@@ -1,11 +1,14 @@
 package graft.alco
 
 import java.time.{Instant, ZoneOffset}
+import java.util.concurrent.{CompletionException, Executors}
 
 import scala.util.Try
 
 import graft.functions.KeyedRollup
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** End-to-end wiring of alco's collect → parse → store → aggregate loop
@@ -15,8 +18,9 @@ import org.apache.spark.sql.functions._
   *   REPLACE dedup (ONE hash shuffle) → Parse.extract + Enrich (broadcast
   *   joins) → partitioned fan-out write (tool_key/role/day) with rollup +
   *   distinct + lineage stats riding the write via observe() →
-  *   copy-on-write merge of partitions that overlap earlier commits →
-  *   manifest commit (atomic rename = commit point) → audit rows.
+  *   copy-on-write merge of partitions that overlap earlier commits ∥
+  *   rollup-count + distinct-set writes (a side thread) → manifest commit
+  *   (atomic rename = commit point) → audit rows.
   *
   * Scale design (10^12 turns):
   *  - ONE data shuffle total on the hot path. The REPLACE dedup's hash
@@ -235,30 +239,37 @@ object Pipeline {
     val touched = contribs.map(_.partition).distinct
     val committedParts = prior.map(_.committedPartitions.toSet).getOrElse(Set.empty)
     val overlap = touched.filter(committedParts.contains)
-    val (mergedCounts, mergedFiles) =
-      if (overlap.isEmpty) (Map.empty[String, Long], Map.empty[String, Seq[String]])
-      else mergeOverlapping(spark, routedPath, s"$outRoot/_merge_tmp",
-        overlap, batchId, cfg)
 
-    // Committed file set after this batch: carry forward untouched
-    // partitions, take the merge outputs for rewritten ones, and everything
-    // on disk for fresh ones (orphans were cleaned, so all files there are
-    // this batch's).
-    val overlapSet = overlap.toSet
-    val touchedSet = touched.toSet
-    val carried = committedFileSet.filterNot(f =>
-      touchedSet.contains(f.substring(0, f.lastIndexOf('/')))).toSeq
-    val newFiles = touched.flatMap { p =>
-      if (overlapSet.contains(p)) mergedFiles(p).map(n => s"$p/$n")
-      else listFiles(spark, s"$routedPath/$p").map(n => s"$p/$n")
-    }
+    // The rollup counts and distinct sets depend only on `contribs`: they are
+    // written beside the merge and joined before the commit point, so a
+    // failed output write aborts the batch and a committed batch always has
+    // both (they overwrite the batch's own dirs, so a rerun rewrites them).
+    val (files, stats) = alongside(spark)(
+        writeBatchOutputs(spark, outRoot, batchId, contribs, distinctCols)) {
+      val (mergedCounts, mergedFiles) =
+        if (overlap.isEmpty) (Map.empty[String, Long], Map.empty[String, Seq[String]])
+        else mergeOverlapping(spark, routedPath, s"$outRoot/_merge_tmp",
+          overlap, batchId, cfg)
 
-    val stats = touched.map { p =>
-      val contributed = contribs.filter(_.partition == p).map(_.n).sum
-      Manifest.PartitionStat(p, mergedCounts.getOrElse(p, contributed))
+      // Committed file set after this batch: carry forward untouched
+      // partitions, take the merge outputs for rewritten ones, and everything
+      // on disk for fresh ones (orphans were cleaned, so all files there are
+      // this batch's).
+      val overlapSet = overlap.toSet
+      val touchedSet = touched.toSet
+      val carried = committedFileSet.filterNot(f =>
+        touchedSet.contains(f.substring(0, f.lastIndexOf('/')))).toSeq
+      val written = touched.flatMap { p =>
+        if (overlapSet.contains(p)) mergedFiles(p).map(n => s"$p/$n")
+        else listFiles(spark, s"$routedPath/$p").map(n => s"$p/$n")
+      }
+      (carried ++ written, touched.map { p =>
+        val contributed = contribs.filter(_.partition == p).map(_.n).sum
+        Manifest.PartitionStat(p, mergedCounts.getOrElse(p, contributed))
+      })
     }
     val routedRows = contribs.map(_.n).sum
-    val aggMs = ms(tAgg) // metric parse + overlap merge + file-set derivation
+    val aggMs = ms(tAgg) // metric parse + overlap merge ∥ batch outputs
 
     // observe() metrics ride the write pass for free; a degenerate zero-task
     // plan falls back to counting.
@@ -269,7 +280,8 @@ object Pipeline {
       .getOrElse(turns.count())
 
     // COMMIT POINT: atomic manifest rename. Crash before → this batch's
-    // files are orphans, cleaned next run. Crash after → batch is committed,
+    // files are orphans, cleaned next run, and the rerun rewrites its
+    // rollup/distinct dirs. Crash after → batch is committed with both,
     // rerun short-circuits on batchId.
     val tCommit = System.nanoTime()
     // expectedParentId: `carried` was derived from `prior` — if another
@@ -278,7 +290,7 @@ object Pipeline {
     // CommitConflictException instead (this batch's files become orphans
     // the rerun cleans, then the rerun replans against the new snapshot).
     val snap = Manifest.commit(routedPath, batchId, stats,
-      carried ++ newFiles, ms(t0), writerId,
+      files, ms(t0), writerId,
       expectedParentId = Some(prior.map(_.snapshotId).getOrElse(-1L)))
 
     // Vacuum superseded files of merged partitions (post-commit; a crash
@@ -287,14 +299,14 @@ object Pipeline {
       cleanupOrphans(spark, routedPath, snap.files.toSet)
     val commitMs = ms(tCommit)
 
+    // The audit rows name the committed snapshot, so they follow the commit;
+    // one file per batch whatever the core count.
     val tOutputs = System.nanoTime()
-    writeBatchOutputs(spark, outRoot, batchId, contribs, distinctCols)
-
     import spark.implicits._
     val audit = contribs.map(c =>
       (snap.snapshotId, batchId, c.partition, c.n, ms(t0)))
       .toDF("snapshot_id", "batch_id", "partition", "row_count", "wall_ms")
-    TableWrite(audit, s"$outRoot/audit", SaveMode.Append)
+    TableWrite(audit.coalesce(1), s"$outRoot/audit", SaveMode.Append)
     val outputsMs = ms(tOutputs)
 
     Result(batchId, snap.snapshotId, inputRows, routedRows, quarantined,
@@ -302,10 +314,11 @@ object Pipeline {
       mergedPartitions = overlap.size.toLong,
       // per-stage wall clocks, published per bench leg so a degraded run is
       // attributable: setup = manifest+orphan sweep (driver metadata),
-      // write = THE data job (read→classify→dedup→extract→enrich→fan-out
-      // write), agg = metric parse + overlap merge, commit = snapshot
-      // rename + vacuum (driver fs), outputs = rollup/distinct/audit writes
-      // (three tiny driver-local jobs).
+      // write = THE data job (read→classify→dedup→extract→fan-out write),
+      // agg = metric parse + overlap merge and file-set derivation, with the
+      // rollup/distinct writes running beside them and joined at its end,
+      // commit = snapshot rename + vacuum (driver fs), outputs = the audit
+      // append (one tiny driver-local job).
       stageTimings = Map("setup_ms" -> setupMs, "write_ms" -> writeMs,
         "agg_ms" -> aggMs, "commit_ms" -> commitMs,
         "outputs_ms" -> outputsMs, "total_ms" -> ms(t0)))
@@ -313,6 +326,7 @@ object Pipeline {
 
   /** Per-batch rollup + distinct-set tables (alco's Redis counters/SADD
     * caches) — driver-local rows, bounded cardinality, two tiny writes.
+    * Each overwrites its batch's own dir, so rewriting them is idempotent.
     */
   private def writeBatchOutputs(spark: SparkSession, outRoot: String,
       batchId: Long, contribs: Seq[Contrib], distinctCols: Seq[String]): Unit = {
@@ -333,6 +347,36 @@ object Pipeline {
       .toSeq.collect { case ((sink, c), vs) if vs.nonEmpty => (sink, c, vs.toSeq.sorted) }
     TableWrite(distinctRows.toDF("sink_key", "column", "values").coalesce(1),
       s"$outRoot/distinct_sets_batch_$batchId", SaveMode.Overwrite)
+  }
+
+  /** Daemon threads for the writes `alongside` runs off the calling thread. */
+  private lazy val sideThreads = Executors.newCachedThreadPool { (r: Runnable) =>
+    val t = new Thread(r, "pipeline-batch-outputs")
+    t.setDaemon(true)
+    t
+  }
+
+  /** Runs `side` on another thread while `main` runs on this one, and
+    * returns `main`'s result once both have finished — also when either
+    * throws, so nothing `side` started outlives the call. The side thread
+    * carries this thread's active session and Spark local properties (job
+    * group, description, tags), as Spark's broadcast builds do, so
+    * cancelling the caller's job group cancels its jobs too. A failure of
+    * `main` wins; one of `side` alone is rethrown after `main` returns.
+    */
+  private def alongside[A](spark: SparkSession)(side: => Unit)(main: => A): A = {
+    val pending = SQLExecution.withThreadLocalCaptured(castToImpl(spark), sideThreads)(side)
+    def await(): Unit =
+      try pending.join()
+      catch { case e: CompletionException if e.getCause != null => throw e.getCause }
+    val result =
+      try main
+      catch { case e: Throwable =>
+        try await() catch { case s: Throwable => e.addSuppressed(s) }
+        throw e
+      }
+    await()
+    result
   }
 
   /** Copy-on-write rewrite of partitions receiving rows on top of committed

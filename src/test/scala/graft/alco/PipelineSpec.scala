@@ -51,24 +51,31 @@ class PipelineSpec extends SparkSpec {
     assert((got diff want).isEmpty && (want diff got).isEmpty)
   }
 
-  test("per-sink aggregate counts equal the oracle") {
-    result
-    val got = spark.read.parquet(s"$out/rollup_counts_batch_0")
+  /** (tool, role, window start µs, n) rows of a batch's rollup-count output. */
+  private def rollups(dir: String): Set[(String, String, Long, Long)] =
+    spark.read.parquet(dir)
       .select($"tool", $"role",
         (unix_timestamp($"window_start") * 1000000L).as("w"), $"n")
       .as[(String, String, Long, Long)].collect().toSet
-    val want = NaiveOracle.rollups(oracleRouted)
-      .map(r => (r.tool, r.role, r.windowStartMicros, r.n)).toSet
-    assert(got == want)
+  private lazy val oracleRollups = NaiveOracle.rollups(oracleRouted)
+    .map(r => (r.tool, r.role, r.windowStartMicros, r.n)).toSet
+
+  /** (sink, column) → values of a batch's distinct-set output. */
+  private def distinctSets(dir: String): Map[(String, String), Set[String]] =
+    spark.read.parquet(dir)
+      .as[(String, String, Seq[String])].collect()
+      .map { case (sink, c, vs) => ((sink, c), vs.toSet) }.toMap
+  private lazy val oracleDistincts =
+    NaiveOracle.distincts(oracleRouted, Seq("role", "called_tool", "status"))
+
+  test("per-sink aggregate counts equal the oracle") {
+    result
+    assert(rollups(s"$out/rollup_counts_batch_0") == oracleRollups)
   }
 
   test("distinct-value rollups equal the oracle") {
     result
-    val got = spark.read.parquet(s"$out/distinct_sets_batch_0")
-      .as[(String, String, Seq[String])].collect()
-      .map { case (sink, c, vs) => ((sink, c), vs.toSet) }.toMap
-    val want = NaiveOracle.distincts(oracleRouted, Seq("role", "called_tool", "status"))
-    assert(got == want)
+    assert(distinctSets(s"$out/distinct_sets_batch_0") == oracleDistincts)
   }
 
   test("quarantine counted, never silently dropped") {
@@ -93,6 +100,8 @@ class PipelineSpec extends SparkSpec {
     val snap = Manifest.latest(s"$out/routed").get
     assert(snap.committedPartitions.nonEmpty)
     assert(snap.stats.map(_.rowCount).sum == result.routedRows)
+    // batch 0 is the only batch that wrote to `out`: one audit file per batch
+    assert(dataFiles(s"$out/audit").size == 1)
   }
 
   test("rerun of a committed batchId is an idempotent no-op") {
@@ -127,6 +136,50 @@ class PipelineSpec extends SparkSpec {
     val snap = Manifest.latest(s"$out3/routed").get
     assert(snap.files.nonEmpty)
     assert(snap.files.toSet == listDataFiles(s"$out3/routed"))
+    assertBatchOutputsMatchOracle(out3)
+
+    // A real crash in the same window: the data write succeeds, then the
+    // batch dies at its rollup write, which runs before the commit point.
+    // Nothing is committed, and the rerun writes the table and both batch
+    // outputs exactly once.
+    val out3b = tmpDir("pipe_crash_outputs")
+    withFailingRollupCommit {
+      intercept[Exception] {
+        Pipeline.run(spark, turns.toDF(), out3b, Pipeline.Config(), batchId = 0L)
+      }
+    }
+    assert(Manifest.latest(s"$out3b/routed").map(_.snapshotId).isEmpty,
+      "the crashed batch must not commit")
+    val r3 = Pipeline.run(spark, turns.toDF(), out3b, Pipeline.Config(), batchId = 0L)
+    assert(r3.routedRows == oracleRouted.size)
+    assert(Manifest.readCommitted(spark, s"$out3b/routed").get.count() == oracleRouted.size)
+    assert(Manifest.latest(s"$out3b/routed").get.files.toSet ==
+      listDataFiles(s"$out3b/routed"))
+    assertBatchOutputsMatchOracle(out3b)
+  }
+
+  /** Batch `b`'s rollup counts sum to its routed rows and its distinct sets exist. */
+  private def assertBatchOutputsWritten(root: String, b: Long, routedRows: Long): Unit = {
+    assert(spark.read.parquet(s"$root/rollup_counts_batch_$b")
+      .agg(sum($"n")).as[Long].head() == routedRows)
+    assert(dataFiles(s"$root/distinct_sets_batch_$b").nonEmpty)
+  }
+
+  /** `root`'s batch-0 rollup counts and distinct sets equal the oracle's. */
+  private def assertBatchOutputsMatchOracle(root: String): Unit = {
+    assert(rollups(s"$root/rollup_counts_batch_0") == oracleRollups)
+    assert(distinctSets(s"$root/distinct_sets_batch_0") == oracleDistincts)
+  }
+
+  /** Runs `body` with every `rollup_counts_batch_…` write failing at its job
+    * commit (the session's commit protocol, restored afterwards).
+    */
+  private def withFailingRollupCommit[A](body: => A): A = {
+    val key = "spark.sql.sources.commitProtocolClass"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, classOf[RollupCommitFails].getName)
+    try body
+    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("new batch into a committed partition merges (REPLACE), never drops or duplicates") {
@@ -150,6 +203,8 @@ class PipelineSpec extends SparkSpec {
     val snap = Manifest.latest(s"$out2/routed").get
     assert(snap.files.toSet == listDataFiles(s"$out2/routed"),
       "vacuum leaves exactly the committed files on disk")
+    // batch 1's rollup and distinct outputs were written while it merged
+    assertBatchOutputsWritten(out2, 1L, r2.routedRows)
   }
 
   test("a failed merge rename aborts the batch before commit and keeps the prior rows") {
@@ -158,10 +213,7 @@ class PipelineSpec extends SparkSpec {
     val cut = lit("2025-01-03 00:00:00").cast("timestamp")
     Pipeline.run(spark, turns.filter($"ts" < cut).toDF(), outR, Pipeline.Config(), batchId = 0L)
     val prior = Manifest.latest(routed).get
-    def committedRows() = Manifest.readCommitted(spark, routed).get
-      .select($"conv_id", $"turn_idx", $"text").as[(String, Int, String)]
-      .collect().toSet
-    val priorRows = committedRows()
+    val priorRows = committedRows(routed)
     // every `file:` filesystem built from the session's Hadoop conf now
     // refuses renames into merge-… names, as Hadoop reports it: false
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -176,7 +228,68 @@ class PipelineSpec extends SparkSpec {
     } finally saved.foreach { case (k, v) => v.fold(hconf.unset(k))(hconf.set(k, _)) }
     assert(Manifest.latest(routed).get.snapshotId == prior.snapshotId,
       "no snapshot may name merge files that are not on disk")
-    assert(committedRows() == priorRows)
+    assert(committedRows(routed) == priorRows)
+  }
+
+  test("a failed batch-output write beside a merge aborts the batch before commit") {
+    val outF = tmpDir("pipe_output_fails")
+    val routed = s"$outF/routed"
+    val cut = lit("2025-01-03 00:00:00").cast("timestamp")
+    Pipeline.run(spark, turns.filter($"ts" < cut).toDF(), outF, Pipeline.Config(), batchId = 0L)
+    val prior = Manifest.latest(routed).get
+    val priorRows = committedRows(routed)
+    // batch 1 overlaps batch 0, so its rollup write fails while it merges
+    val e = withFailingRollupCommit {
+      intercept[Exception] {
+        Pipeline.run(spark, turns.toDF(), outF, Pipeline.Config(), batchId = 1L)
+      }
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains(RollupCommitFails.Message)),
+      s"the injected failure must be what aborted the batch: $e")
+    assert(Manifest.latest(routed).get.snapshotId == prior.snapshotId,
+      "a batch whose outputs failed must not commit")
+    assert(committedRows(routed) == priorRows)
+    // a clean rerun commits the batch with both outputs
+    val r = Pipeline.run(spark, turns.toDF(), outF, Pipeline.Config(), batchId = 1L)
+    assert(r.mergedPartitions > 0)
+    assert(Manifest.latest(routed).get.snapshotId == prior.snapshotId + 1)
+    assert(Manifest.readCommitted(spark, routed).get.count() == oracleRouted.size)
+    assertBatchOutputsWritten(outF, 1L, r.routedRows)
+  }
+
+  test("batch-output writes run in the caller's job group, so cancelling it reaches them") {
+    val outG = tmpDir("pipe_job_group")
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    def inGroup(group: String)(body: => Any): Unit = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    def marker(name: String): Unit = inGroup(name)(sc.parallelize(Seq(1), 1).count())
+    val cut = lit("2025-01-03 00:00:00").cast("timestamp")
+    sc.addSparkListener(listener)
+    try {
+      // two batches in two groups: the second reuses the first's side thread
+      marker("m0")
+      inGroup("batch-0")(Pipeline.run(spark, turns.filter($"ts" < cut).toDF(), outG,
+        Pipeline.Config(), batchId = 0L))
+      marker("m1")
+      inGroup("batch-1")(Pipeline.run(spark, turns.toDF(), outG, Pipeline.Config(), batchId = 1L))
+      marker("m2")
+    } finally sc.removeSparkListener(listener)
+    val seen = Iterator.continually(Option(groups.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .getOrElse(fail("marker job m2 never reached the listener")))
+      .takeWhile(_ != "m2").toSeq.dropWhile(_ != "m0").drop(1)
+    val (batch0, rest) = seen.span(_ != "m1")
+    val batch1 = rest.drop(1)
+    assert(batch0.nonEmpty && batch0.forall(_ == "batch-0"), batch0)
+    assert(batch1.nonEmpty && batch1.forall(_ == "batch-1"), batch1)
   }
 
   test("batch idempotency is writer-scoped: a new writer's batch 0 is not masked") {
@@ -254,11 +367,8 @@ class PipelineSpec extends SparkSpec {
     val cfgSmall = Pipeline.Config(maxRecordsPerFile = 500L)
     Pipeline.run(spark, turns.toDF(), out7, cfgSmall, batchId = 0L)
     val routed = s"$out7/routed"
-    def committedRows() = Manifest.readCommitted(spark, routed).get
-      .select($"conv_id", $"turn_idx", $"text").as[(String, Int, String)]
-      .collect().toSet
     val filesBefore = Manifest.committedFiles(routed)
-    val rowsBefore = committedRows()
+    val rowsBefore = committedRows(routed)
     assert(filesBefore.groupBy(f => f.substring(0, f.lastIndexOf('/')))
       .exists(_._2.size >= 3), "fixture must fragment some partition")
 
@@ -270,7 +380,7 @@ class PipelineSpec extends SparkSpec {
     // CoW swap is complete: disk holds exactly the committed set (old
     // fragments swept), and the readable rows are identical
     assert(Pipeline.listPartitionFiles(spark, routed).toSet == filesAfter)
-    assert(committedRows() == rowsBefore)
+    assert(committedRows(routed) == rowsBefore)
     // already-compact partitions are left alone (idempotent no-op)
     val res2 = Compact.compact(spark, out7, minFiles = 2)
     assert(res2.compactedPartitions.isEmpty &&
@@ -383,6 +493,15 @@ class PipelineSpec extends SparkSpec {
       s"bloom row-group skip should scan ≪ table: scanned $scanned of $table")
   }
 
+  /** (conv_id, turn_idx, text) of the rows the table's latest snapshot names. */
+  private def committedRows(routed: String): Set[(String, Int, String)] =
+    Manifest.readCommitted(spark, routed).get
+      .select($"conv_id", $"turn_idx", $"text").as[(String, Int, String)]
+      .collect().toSet
+
+  /** Data files directly under `dir` (no `_SUCCESS`, no `.crc`). */
+  private def dataFiles(dir: String): Seq[String] = Pipeline.listFiles(spark, dir)
+
   private def listDataFiles(root: String): Set[String] = {
     import scala.jdk.CollectionConverters._
     val base = java.nio.file.Paths.get(root)
@@ -405,4 +524,21 @@ class MergeRenameFailsFs extends org.apache.hadoop.fs.LocalFileSystem {
   override def rename(src: org.apache.hadoop.fs.Path,
                       dst: org.apache.hadoop.fs.Path): Boolean =
     !dst.getName.startsWith("merge-") && super.rename(src, dst)
+}
+
+/** Commit protocol whose job commit fails for `rollup_counts_batch_…` outputs,
+  * the way a crash at that write leaves the batch.
+  */
+class RollupCommitFails(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
+    extends org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol(
+      jobId, path, dynamicPartitionOverwrite) {
+  override def commitJob(job: org.apache.hadoop.mapreduce.JobContext,
+      taskCommits: Seq[org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage]): Unit =
+    if (path.contains("/rollup_counts_batch_"))
+      throw new java.io.IOException(s"${RollupCommitFails.Message}: $path")
+    else super.commitJob(job, taskCommits)
+}
+
+object RollupCommitFails {
+  val Message = "injected rollup job-commit failure"
 }
